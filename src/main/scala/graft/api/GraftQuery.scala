@@ -20,59 +20,44 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (exact, associative — see [[Det.sumQ]]; NOT a DECIMAL cast, whose
   * rounding differs between Spark and DuckDB).
   */
-trait GraftQuery {
-  def name: String
-
-  /** One-line description for SURVEY §2 traceability. */
-  def doc: String
-
-  def frame(spark: SparkSession, sfDir: String): DataFrame
-
-  /** DuckDB twin; None → driver records a weaker rows-only check. */
-  def oracle: Option[String]
-
-  /** True when the result is a single-row aggregate, which is exempt from
-    * the "oracle ends in a total-order ORDER BY" structural invariant
-    * (SmokeSpec) — a 1-row frame can't hash-flake on row order. Queries
-    * self-declare via [[GraftQuery.oneRow]] so the exemption list can't
-    * drift from the registry.
-    */
-  def singleRow: Boolean = false
-
-  /** True when the Spark frame executes the oracle string VERBATIM
-    * (`spark.sql(oracle.get)`). Dialect-shared queries carry an extra
-    * type contract: every literal in the text must parse to the SAME
-    * type in Spark SQL and DuckDB — in particular `x / 10000.0` stays
-    * DECIMAL in Spark but becomes DOUBLE in DuckDB, so quantized-sum
-    * outputs must be wrapped in CAST(... AS DOUBLE) (or use `1e4`
-    * literals). RelationalSpec enforces the observable half of the
-    * contract mechanically: no DecimalType may appear in a shared
-    * query's analyzed output schema. Queries self-declare via
-    * [[GraftQuery.shared]] so the spec's list can't drift.
-    */
-  def dialectShared: Boolean = false
-}
+final case class GraftQuery(
+    name: String,
+    /** One-line description for SURVEY §2 traceability. */
+    doc: String,
+    /** DuckDB twin; None → driver records a weaker rows-only check. */
+    oracle: Option[String],
+    frame: (SparkSession, String) => DataFrame,
+    /** True when the result is a single-row aggregate, which is exempt
+      * from the "oracle ends in a total-order ORDER BY" structural
+      * invariant (SmokeSpec) — a 1-row frame can't hash-flake on row
+      * order. Queries self-declare via [[GraftQuery.oneRow]] so the
+      * exemption list can't drift from the registry.
+      */
+    singleRow: Boolean = false,
+    /** True when the Spark frame executes the oracle string VERBATIM
+      * (`spark.sql(oracle.get)`). Dialect-shared queries carry an extra
+      * type contract: every literal in the text must parse to the SAME
+      * type in Spark SQL and DuckDB — in particular `x / 10000.0` stays
+      * DECIMAL in Spark but becomes DOUBLE in DuckDB, so quantized-sum
+      * outputs must be wrapped in CAST(... AS DOUBLE) (or use `1e4`
+      * literals). RelationalSpec enforces the observable half of the
+      * contract mechanically: no DecimalType may appear in a shared
+      * query's analyzed output schema. Queries self-declare via
+      * [[GraftQuery.shared]] so the spec's list can't drift.
+      */
+    dialectShared: Boolean = false)
 
 object GraftQuery {
   def apply(n: String, d: String, sql: String)(
-      f: (SparkSession, String) => DataFrame): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = f(spark, sfDir)
-    val oracle = Option(sql)
-  }
+      f: (SparkSession, String) => DataFrame): GraftQuery =
+    GraftQuery(n, d, Option(sql), f)
 
   /** A 1-row aggregate query: exempt from the ORDER-BY invariant (and
     * SmokeSpec asserts the frame really is 1 row, so the flag can't lie).
     */
   def oneRow(n: String, d: String, sql: String)(
-      f: (SparkSession, String) => DataFrame): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = f(spark, sfDir)
-    val oracle = Option(sql)
-    override val singleRow = true
-  }
+      f: (SparkSession, String) => DataFrame): GraftQuery =
+    GraftQuery(n, d, Option(sql), f, singleRow = true)
 
   /** A dialect-shared query: ONE SQL string is both the Spark frame and
     * the DuckDB oracle. `views` registers the temp views the text reads;
@@ -82,23 +67,13 @@ object GraftQuery {
     * exemption as [[oneRow]]).
     */
   def shared(n: String, d: String, sql: String, oneRowResult: Boolean = false)(
-      views: (SparkSession, String) => Unit): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = {
+      views: (SparkSession, String) => Unit): GraftQuery =
+    GraftQuery(n, d, Option(sql), { (spark, sfDir) =>
       views(spark, sfDir); spark.sql(sql)
-    }
-    val oracle = Option(sql)
-    override val singleRow = oneRowResult
-    override val dialectShared = true
-  }
+    }, singleRow = oneRowResult, dialectShared = true)
 
   /** A query with no SQL-expressible oracle (driver does rows-only check). */
   def rowsOnly(n: String, d: String)(
-      f: (SparkSession, String) => DataFrame): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = f(spark, sfDir)
-    val oracle = None
-  }
+      f: (SparkSession, String) => DataFrame): GraftQuery =
+    GraftQuery(n, d, None, f)
 }

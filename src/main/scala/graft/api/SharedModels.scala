@@ -1,30 +1,81 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bookkeeping for the shared-model registry (SURVEY §5.3): families
-  * train/mine an artifact once per (session, sfDir) and persist it as a
-  * warehouse table; this object centralizes the two pieces every family
-  * needs identically:
+/** The shared-model registry (SURVEY §5.3): families train/mine an
+  * artifact once per (session, sfDir) and persist it as a warehouse
+  * table; every consumer after the first reads the table. This object
+  * owns that policy, so a family declares it in one line:
   *
-  *   - [[key]]/[[tableFor]]: the marker key AND the table name both carry
-  *     the scale factor — a marker keyed by sfDir pointing at a GLOBAL
-  *     table name would silently serve one scale factor's artifact to
-  *     another after an interleaved build (sf0.001 -> sf0.01 -> sf0.001
-  *     re-reads sf0.01 rows). The sf rides the table name, so each scale
-  *     factor owns its tables and staleness is structurally impossible.
-  *   - [[track]]/[[resetAll]]: every family registers its marker map at
-  *     class-init; `resetAll` clears them ALL, so determinism specs (the
-  *     SimSpec pattern: reset, build twice, compare) genuinely retrain
-  *     instead of re-reading the persisted table — for every family, not
-  *     just the one that happened to expose a reset.
+  * {{{
+  *   private val edges = SharedModels.table(GraphEdgesTable)
+  *   edges(s, d)(graphEdges(s, d))   // builds once, then reads the table
+  * }}}
+  *
+  *   - [[once]]/[[table]]: each family holds its OWN marker map. Builds
+  *     nest across families (a graph top-k build reads the edges, the
+  *     quantizer and the cell representatives, which read the cells), and
+  *     `ConcurrentHashMap.computeIfAbsent` must never re-enter the map it
+  *     is updating, so one global map would throw "Recursive update".
+  *     Concurrent callers of one family wait for its single build.
+  *   - [[tableFor]]: the marker key AND the table name both carry the
+  *     scale factor — a marker keyed by sfDir pointing at a GLOBAL table
+  *     name would silently serve one scale factor's artifact to another
+  *     after an interleaved build (sf0.001 -> sf0.01 -> sf0.001 re-reads
+  *     sf0.01 rows). The sf rides the table name, so each scale factor
+  *     owns its tables and staleness is structurally impossible.
+  *   - [[resetAll]]: clears every family's markers, so determinism specs
+  *     (the SimSpec pattern: reset, build twice, compare) genuinely
+  *     retrain instead of re-reading the persisted table — for every
+  *     family, not just the one that happened to expose a reset.
   */
 object SharedModels {
 
-  type Key = (Int, String)
+  private val families = new java.util.concurrent.ConcurrentLinkedQueue[Once[_]]
 
-  def key(s: SparkSession, d: String): Key =
-    (System.identityHashCode(s.sparkContext), d)
+  /** One family's train-once marker map, keyed by (session, sfDir). */
+  final class Once[V] private[SharedModels] () {
+    private val done =
+      new java.util.concurrent.ConcurrentHashMap[(Int, String), V]
+
+    /** `build`'s value for (s, d): runs `build` on the first call per
+      * (session, sfDir); concurrent callers block until it finishes. A
+      * build that throws leaves no marker, so the next call retries.
+      */
+    def apply(s: SparkSession, d: String)(build: => V): V =
+      done.computeIfAbsent((System.identityHashCode(s.sparkContext), d),
+        _ => build)
+
+    private[SharedModels] def reset(): Unit = done.clear()
+  }
+
+  /** A family whose artifact is not a single table (a driver-side value,
+    * or several tables the build writes itself).
+    */
+  def once[V]: Once[V] = {
+    val o = new Once[V]
+    families.add(o)
+    o
+  }
+
+  /** A family whose artifact is ONE warehouse table named after `base`. */
+  final class Table private[SharedModels] (base: String) {
+    private val built = once[Unit]
+
+    /** The persisted table for (s, d), written from `build` on the first
+      * call per (session, sfDir).
+      */
+    def apply(s: SparkSession, d: String)(build: => DataFrame): DataFrame = {
+      built(s, d)(graft.sources.Warehouse.replaceTable(build, tableFor(base, d)))
+      read(s, base, d)
+    }
+  }
+
+  def table(base: String): Table = new Table(base)
+
+  /** Read a shared table a family's build has written for `d`. */
+  def read(s: SparkSession, base: String, d: String): DataFrame =
+    s.table(s"${graft.sources.Warehouse.Schema}.${tableFor(base, d)}")
 
   /** `base` + a sanitized scale-factor tag + a short hash of the FULL
     * path, e.g. `ngram_pairs_full__sf0_01_1a2b3c4d` for
@@ -42,14 +93,8 @@ object SharedModels {
     f"${base}__${tag}_$h%08x"
   }
 
-  private val tracked =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.util.Map[_, _]]
-
-  /** Register a family's marker map; returns it for inline declaration. */
-  def track[M <: java.util.Map[_, _]](m: M): M = { tracked.add(m); m }
-
-  /** Clear every tracked marker map — the next consumer of each artifact
+  /** Clear every family's markers — the next consumer of each artifact
     * retrains/re-mines and overwrites its table. Test hook.
     */
-  def resetAll(): Unit = tracked.forEach(_.clear())
+  def resetAll(): Unit = families.forEach(_.reset())
 }

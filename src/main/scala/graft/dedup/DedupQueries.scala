@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftQuery
+import graft.api.{GraftQuery, SharedModels}
 import graft.text.TextFns._
 
 /** Deduplication operators over `documents` — exact, n-gram Jaccard,
@@ -227,20 +227,10 @@ object DedupQueries {
     * passing their own frames to [[ngramJaccardFrame]].
     */
   val NgramPairsTable = "ngram_pairs_full"
-  private val pairsDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
+  private val ngramPairs = SharedModels.table(NgramPairsTable)
 
-  private[graft] def sharedNgramPairs(s: SparkSession, d: String): DataFrame = {
-    pairsDone.computeIfAbsent(graft.api.SharedModels.key(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(
-        ngramJaccardFrame(Tables.documents(s, d)),
-        graft.api.SharedModels.tableFor(NgramPairsTable, d))
-      java.lang.Boolean.TRUE
-    })
-    s.table(s"${graft.sources.Warehouse.Schema}." +
-      graft.api.SharedModels.tableFor(NgramPairsTable, d))
-  }
+  private[graft] def sharedNgramPairs(s: SparkSession, d: String): DataFrame =
+    ngramPairs(s, d)(ngramJaccardFrame(Tables.documents(s, d)))
 
   /** The DF-capped posting table (doc_id[, extra...], sh), checkpointed.
     * `extra` columns are evaluated over `docs` (so they may reference

@@ -2,7 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftQuery
+import graft.api.{GraftQuery, SharedModels}
 import TextFns._
 
 /** Text-analysis operators over `documents` — the LLM-training-pipeline
@@ -408,24 +408,39 @@ object TextQueries {
 
   /** ROC-AUC / PR-AUC over any (heur_label, nb_llr) frame — shared by
     * the registry query and the planted separable / shuffled / tie
-    * fixtures (TextDedupSpec).
+    * fixtures (TextDedupSpec). [[aucFrameKeyed]] with no key: its windows
+    * run globally, so the distinct-score frame stays ONE partition across
+    * the checkpoint and nothing after it shuffles.
     */
   def aucFrame(nb: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = aucFrameKeyed(nb)
+
+  /** ROC-AUC / PR-AUC GROUPED by key columns — one row per key value
+    * (the windows partition by the keys, so each key's cumulative sums,
+    * rank totals and trapezoid terms see exactly that key's slice). One
+    * checkpoint and one window chain serve EVERY key — [[qualityLrCv]]
+    * grades its five folds in one call instead of five whole subtrees,
+    * five checkpoints included (guide §2.4: two operations keyed the same
+    * way share one exchange); [[aucFrame]] is the no-key case.
+    */
+  def aucFrameKeyed(nb: org.apache.spark.sql.DataFrame, keys: String*)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val k = keys.map(col)
     val grp = nb
-      .select(when(col("heur_label") === "keep", 1L).otherwise(0L).as("y"),
-        graft.api.Det.quantize(col("nb_llr"), 9).as("sq"))
-      .groupBy(col("sq"))
+      .select(k ++ Seq(
+        when(col("heur_label") === "keep", 1L).otherwise(0L).as("y"),
+        graft.api.Det.quantize(col("nb_llr"), 9).as("sq")): _*)
+      .groupBy(k :+ col("sq"): _*)
       .agg(count(lit(1)).as("cnt"), sum(col("y")).as("pos"))
     // ascending-score cumulative BEFORE each group: positives in a tie
     // group of size cnt starting after cum rows have midrank
     // cum + (cnt+1)/2, i.e. twice-midrank 2*cum + cnt + 1 (exact integer)
-    val wAsc = Window.orderBy(col("sq"))
+    val wAsc = Window.partitionBy(k: _*).orderBy(col("sq"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // descending-score cumulative INCLUDING each group: the (TP, FP)
     // operating point after admitting every doc scoring >= this group
-    val wDesc = Window.orderBy(col("sq").desc)
+    val wDesc = Window.partitionBy(k: _*).orderBy(col("sq").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // materialized via localCheckpoint: pts feeds BOTH readouts (rank-sum
     // totals and PR trapezoid) — without it each leg re-runs the score
@@ -437,80 +452,28 @@ object TextQueries {
       .withColumn("tp", sum(col("pos")).over(wDesc))
       .withColumn("fp", sum(col("cnt") - col("pos")).over(wDesc))
       .localCheckpoint()
-    val tot = pts.agg(max(col("tp")).as("p"),
+    val tot = pts.groupBy(k: _*).agg(max(col("tp")).as("p"),
       max(col("fp")).as("n"), count(lit(1)).as("n_groups"),
       sum(col("r2pos")).as("r2"))
-    val wLag = Window.orderBy(col("sq").desc)
-    val pr = pts.crossJoin(broadcast(tot))
-      .withColumn("recall", col("tp").cast("double") / col("p").cast("double"))
-      .withColumn("prec", col("tp").cast("double")
-        / (col("tp") + col("fp")).cast("double"))
-      .withColumn("recall_prev",
-        lag(col("recall"), 1, 0.0).over(wLag))
-      .withColumn("prec_prev", lag(col("prec"), 1, 1.0).over(wLag))
-      .agg(sum(graft.api.Det.quantize(
-        (col("recall") - col("recall_prev"))
-          * (col("prec") + col("prec_prev")) * lit(0.5), 9)).as("prq"))
-    tot.crossJoin(broadcast(pr))
-      .select(col("p").as("n_pos"), col("n").as("n_neg"), col("n_groups"),
-        ((col("r2") - col("p") * (col("p") + 1)).cast("double")
-          / (lit(2) * col("p") * col("n")).cast("double")).as("auc_roc"),
-        (col("prq").cast("double") / lit(1e9)).as("pr_auc"))
-  }
-
-  /** [[aucFrame]] GROUPED by a key column — one row of ROC/PR-AUC per
-    * key value, the identical per-key arithmetic (the windows partition
-    * by the key instead of running globally, so each key's cumulative
-    * sums, rank totals and trapezoid terms see exactly the rows the
-    * global version would see on that key's slice). One checkpoint and
-    * one window chain serve EVERY key — [[qualityLrCv]] used to run five
-    * whole [[aucFrame]] subtrees, five checkpoints included (guide §2.4:
-    * two operations keyed the same way share one exchange). As a bonus
-    * the fold-partitioned windows replace five single-partition global
-    * windows.
-    */
-  def aucFrameKeyed(nb: org.apache.spark.sql.DataFrame, key: String)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grp = nb
-      .select(col(key),
-        when(col("heur_label") === "keep", 1L).otherwise(0L).as("y"),
-        graft.api.Det.quantize(col("nb_llr"), 9).as("sq"))
-      .groupBy(col(key), col("sq"))
-      .agg(count(lit(1)).as("cnt"), sum(col("y")).as("pos"))
-    val wAsc = Window.partitionBy(col(key)).orderBy(col("sq"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wDesc = Window.partitionBy(col(key)).orderBy(col("sq").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pts = grp
-      .withColumn("cum", coalesce(sum(col("cnt")).over(wAsc), lit(0L)))
-      .withColumn("r2pos", col("pos") * (lit(2) * col("cum") + col("cnt") + 1))
-      .withColumn("tp", sum(col("pos")).over(wDesc))
-      .withColumn("fp", sum(col("cnt") - col("pos")).over(wDesc))
-      .localCheckpoint()
-    val tot = pts.groupBy(col(key)).agg(max(col("tp")).as("p"),
-      max(col("fp")).as("n"), count(lit(1)).as("n_groups"),
-      sum(col("r2pos")).as("r2"))
-    val wLag = Window.partitionBy(col(key)).orderBy(col("sq").desc)
+    val wLag = Window.partitionBy(k: _*).orderBy(col("sq").desc)
     val pr = pts
-      .join(broadcast(tot.select(col(key).as("tk"), col("p"))),
-        col(key) === col("tk"))
+      .join(broadcast(tot.select(k :+ col("p"): _*)), keys)
       .withColumn("recall", col("tp").cast("double") / col("p").cast("double"))
       .withColumn("prec", col("tp").cast("double")
         / (col("tp") + col("fp")).cast("double"))
       .withColumn("recall_prev",
         lag(col("recall"), 1, 0.0).over(wLag))
       .withColumn("prec_prev", lag(col("prec"), 1, 1.0).over(wLag))
-      .groupBy(col(key))
+      .groupBy(k: _*)
       .agg(sum(graft.api.Det.quantize(
         (col("recall") - col("recall_prev"))
           * (col("prec") + col("prec_prev")) * lit(0.5), 9)).as("prq"))
-    tot.join(pr, key)
-      .select(col(key), col("p").as("n_pos"), col("n").as("n_neg"),
+    tot.join(broadcast(pr), keys)
+      .select(k ++ Seq(col("p").as("n_pos"), col("n").as("n_neg"),
         col("n_groups"),
         ((col("r2") - col("p") * (col("p") + 1)).cast("double")
           / (lit(2) * col("p") * col("n")).cast("double")).as("auc_roc"),
-        (col("prq").cast("double") / lit(1e9)).as("pr_auc"))
+        (col("prq").cast("double") / lit(1e9)).as("pr_auc")): _*)
   }
 
   /** GD sweep count for [[qualityLr]] — the oracle unrolls exactly this
@@ -595,14 +558,11 @@ object TextQueries {
     * the per-doc filter and the AUC readout (the [[SharedModels]]
     * discipline, with a driver-side 4-vector instead of a table).
     */
-  private val lrWeightsCache = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, IndexedSeq[Double]])
+  private val lrWeights = SharedModels.once[IndexedSeq[Double]]
 
   private def sharedLrWeights(s: org.apache.spark.sql.SparkSession,
       d: String): IndexedSeq[Double] =
-    lrWeightsCache.computeIfAbsent(graft.api.SharedModels.key(s, d),
-      _ => lrTrain(lrFeatures(Tables.documents(s, d)), LrIters))
+    lrWeights(s, d)(lrTrain(lrFeatures(Tables.documents(s, d)), LrIters))
 
   /** Per-doc scores under the trained weights — shared by [[qualityLr]]
     * and [[qualityLrAuc]].
@@ -2049,28 +2009,20 @@ object TextQueries {
     */
   val BpeMergesTable = "bpe_merges_full"
   val BpeVocabTable = "bpe_vocab_full"
-  private val bpeDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
-  private def tkey(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.api.SharedModels.key(s, d)
-  private def sharedTable(s: org.apache.spark.sql.SparkSession,
-      base: String, d: String): org.apache.spark.sql.DataFrame =
-    s.table(s"${graft.sources.Warehouse.Schema}." +
-      graft.api.SharedModels.tableFor(base, d))
+  private val bpeTables = SharedModels.once[Unit]
 
   private def sharedBpe(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    bpeDone.computeIfAbsent(tkey(s, d), _ => {
+    bpeTables(s, d) {
       val (rules, vocab) =
         bpeTrainState(Tables.documents(s, d), BpeIters, applyLast = true)
       graft.sources.Warehouse.replaceTable(rules,
-        graft.api.SharedModels.tableFor(BpeMergesTable, d))
+        SharedModels.tableFor(BpeMergesTable, d))
       graft.sources.Warehouse.replaceTable(vocab,
-        graft.api.SharedModels.tableFor(BpeVocabTable, d))
-      java.lang.Boolean.TRUE
-    })
-    (sharedTable(s, BpeMergesTable, d), sharedTable(s, BpeVocabTable, d))
+        SharedModels.tableFor(BpeVocabTable, d))
+    }
+    (SharedModels.read(s, BpeMergesTable, d),
+      SharedModels.read(s, BpeVocabTable, d))
   }
 
   /** Shared per-doc NB-quality table — [[qualityNbFrame]] trains the
@@ -2078,40 +2030,22 @@ object TextQueries {
     * confusion matrix, calibration curve) share the persisted result.
     */
   val DocNbTable = "doc_nb_full"
-  private val nbDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
+  private val docNb = SharedModels.table(DocNbTable)
 
   private def sharedDocNb(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    nbDone.computeIfAbsent(tkey(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(
-        qualityNbFrame(Tables.documents(s, d)),
-        graft.api.SharedModels.tableFor(DocNbTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, DocNbTable, d)
-  }
+      : org.apache.spark.sql.DataFrame =
+    docNb(s, d)(qualityNbFrame(Tables.documents(s, d)))
 
   /** Shared per-doc bigram-LM perplexity table — [[lmPerplexityFrame]]
     * trains the LM and scores the corpus; its two consumers (per-doc
     * report + CCNet bands) share the persisted result.
     */
   val DocPplTable = "doc_ppl_full"
-  private val pplDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
+  private val docPpl = SharedModels.table(DocPplTable)
 
   private def sharedDocPpl(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    pplDone.computeIfAbsent(tkey(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(
-        lmPerplexityFrame(Tables.documents(s, d)),
-        graft.api.SharedModels.tableFor(DocPplTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, DocPplTable, d)
-  }
+      : org.apache.spark.sql.DataFrame =
+    docPpl(s, d)(lmPerplexityFrame(Tables.documents(s, d)))
 
   /** Shared trainer core: the merge table PLUS the vocab in its final
     * segmentation. `applyLast` controls whether the last round's rule is

@@ -13,20 +13,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // fresh warehouse per JVM: a stale spark-warehouse dir + fresh
-      // in-memory catalog makes managed-table CREATE fail with
-      // LOCATION_ALREADY_EXISTS
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local()
     // the shared-session contract (see TextFns scaladoc): custom functions
     // are registered up front so suite execution order can't matter
     graft.functions.GraftFunctions.register(s)
